@@ -429,6 +429,12 @@ def main() -> None:
         repo.joinpath(f"BENCH_FULL_r{int(round_no)}{suffix}.json").write_text(
             json.dumps(full, indent=1) + "\n"
         )
+    else:
+        print(
+            f"# SPARK_GRAFT_ROUND unset or non-numeric ({round_no!r}): "
+            "per-round BENCH_FULL_r{N}.json not written",
+            file=sys.stderr,
+        )
 
     # The driver keeps only the last ~2000 chars of output and parses the
     # last complete JSON line it finds there. With 90+ queries a naive

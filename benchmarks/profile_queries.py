@@ -150,6 +150,10 @@ def main() -> None:
             print(f"# {name}: ERROR {exc}", file=sys.stderr)
             results[name] = {"err": str(exc)[:300]}
             continue
+        finally:
+            # a query that raised after note() calls must not leave its
+            # frames for the process lifetime (or the next query's dump)
+            plandump.drain()
         rec = {
             "build_s": round(t1 - t0, 3),
             "exec_s": round(t2 - t1, 3),

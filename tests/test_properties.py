@@ -142,14 +142,14 @@ def test_regex_chunk_carryover_with_unique_pieces(words, size, overlap, sep_char
     st.integers(2, 16),
 )
 def test_space_saving_superset_guarantee(stream, capacity):
-    """Space-saving (operators/sketch.py) keeps every value whose
-    frequency exceeds n/capacity — the Metwally guarantee the
+    """The Misra-Gries summary (operators/sketch.py) keeps every value
+    whose frequency exceeds n/capacity — the guarantee the
     heavy-hitters exactness condition rests on."""
     import pandas as pd
 
-    from vechord_spark.operators.sketch import _space_saving_partition
+    from vechord_spark.operators.sketch import _misra_gries_partition
 
-    gen = _space_saving_partition(capacity=capacity, col="v")
+    gen = _misra_gries_partition(capacity=capacity, col="v")
     (out,) = list(gen(iter([pd.DataFrame({"v": stream})])))
     kept = set(out["v"])
     assert len(kept) <= capacity
@@ -172,14 +172,14 @@ def test_space_saving_guarantee_across_batches(stream, capacity, n_batches):
     slices the partition into record batches."""
     import pandas as pd
 
-    from vechord_spark.operators.sketch import _space_saving_partition
+    from vechord_spark.operators.sketch import _misra_gries_partition
 
     size = max(1, len(stream) // n_batches)
     batches = [
         pd.DataFrame({"v": stream[i : i + size]})
         for i in range(0, len(stream), size)
     ]
-    gen = _space_saving_partition(capacity=capacity, col="v")
+    gen = _misra_gries_partition(capacity=capacity, col="v")
     (out,) = list(gen(iter(batches)))
     kept = set(out["v"])
     n = len(stream)

@@ -1,4 +1,4 @@
-"""Sketch operators: HLL gate, space-saving heavy hitters, quantile
+"""Sketch operators: HLL gate, Misra-Gries heavy hitters, quantile
 rank gate (operators/sketch.py). The suite-level DuckDB parity rows are
 in test_oracle_parity.py; these tests pin the sketch-specific
 guarantees — bounded candidate sets, eviction behavior, skew, nulls."""
@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from vechord_spark.operators.sketch import (
-    _space_saving_partition,
+    _misra_gries_partition,
     approx_distinct_gate,
     heavy_hitters,
     quantile_rank_gate,
@@ -43,7 +43,7 @@ def test_heavy_hitters_ignores_nulls_and_breaks_ties(spark):
 def test_space_saving_keeps_frequent_evicts_rare():
     import pandas as pd
 
-    gen = _space_saving_partition(capacity=3, col="v")
+    gen = _misra_gries_partition(capacity=3, col="v")
     # 'x' dominates; the tail rotates through the other two slots
     stream = ["x"] * 50 + list("abcdefgh") + ["x"] * 50
     (out,) = list(gen(iter([pd.DataFrame({"v": stream})])))
@@ -58,7 +58,7 @@ def test_space_saving_compaction_path_retains_heavy_keys():
     # the summary bounded at <= capacity keys
     import pandas as pd
 
-    gen = _space_saving_partition(capacity=32, col="v")
+    gen = _misra_gries_partition(capacity=32, col="v")
     batches = []
     for b in range(4):
         tail = [f"t{b}_{i}" for i in range(200)]  # 800 distinct singletons

@@ -163,9 +163,25 @@ class Bm25Index:
         if eager:
             if materialize:
                 self.postings.count()
-            row = self.stats.first()
-            self._stats_row = (int(row["n_docs"]), float(row["avgdl"]))
+            self._stats_row = self._collect_stats()
         return self
+
+    def _collect_stats(self) -> tuple[int, float]:
+        row = self.stats.first()
+        # an empty corpus has no avgdl; no posting matches it anyway
+        return int(row["n_docs"]), float(row["avgdl"] or 0.0)
+
+    def _stats_literals(self) -> tuple[int, float] | None:
+        """``(n_docs, avgdl)`` to inline into query plans, or None for
+        the general (broadcast) path. A built index has them once
+        ``persist(eager=True)`` ran; one loaded from its persisted
+        frames collects the 1-row stats table on its first query and
+        keeps it — the frames are immutable parquet, and a loader
+        that holds the index longer re-loads it when they change."""
+        row = getattr(self, "_stats_row", None)
+        if row is None and getattr(self, "_from_frames", False):
+            row = self._stats_row = self._collect_stats()
+        return row
 
     def score(self, terms: Sequence[str]) -> DataFrame:
         """Per-document BM25 score for the given unique query terms.
@@ -190,8 +206,8 @@ class Bm25Index:
         terms = list(dict.fromkeys(terms))
         spark = self.postings.sparkSession
         k1, b = self.k1, self.b
-        stats_row = getattr(self, "_stats_row", None)
-        if stats_row is not None and terms:
+        stats_row = self._stats_literals() if terms else None
+        if stats_row is not None:
             # FAST PATH (eager/persisted index — round 10): this is
             # what a search engine does with its term dictionary. The
             # per-term df values come from ONE driver-side lookup

@@ -2,7 +2,7 @@
 
 At 100 TB, exact DISTINCT / quantile / top-k answers force either a
 giant shuffle keyed on the value space or executor-memory buffering; the
-production answers are mergeable sketches (HLL, KLL/GK, space-saving)
+production answers are mergeable sketches (HLL, KLL/GK, Misra-Gries)
 whose partial states combine associatively so the whole computation is
 one map-side pass + a tiny merge. The reference engine has no sketch
 surface at all (it delegates aggregation to Postgres); this module adds
@@ -14,9 +14,9 @@ deterministic output (the same exact-gates-approximate pattern as
 - :func:`approx_distinct_gate` — HyperLogLog++ cardinality
   (``approx_count_distinct``) checked against exact per-group counts.
 - :func:`heavy_hitters` — two-pass top-k: bounded-memory per-partition
-  space-saving candidates, then an EXACT recount of only the candidate
+  Misra-Gries candidates, then an EXACT recount of only the candidate
   union. The output is exact (and thus oracle-matchable) whenever every
-  true heavy hitter survives pass 1, which the space-saving guarantee
+  true heavy hitter survives pass 1, which the Misra-Gries guarantee
   gives for any item with global frequency > N/capacity.
 - :func:`quantile_rank_gate` — ``percentile_approx`` (mergeable GK
   sketch) verified by its actual contract: RANK error ≤ 1/accuracy,
@@ -66,7 +66,7 @@ def approx_distinct_gate(
     )
 
 
-def _space_saving_partition(capacity: int, col: str):
+def _misra_gries_partition(capacity: int, col: str):
     """mapInPandas stage: per-partition heavy-hitter summary.
 
     Misra-Gries-style MERGEABLE summary (Agarwal et al., "Mergeable
@@ -127,22 +127,25 @@ def heavy_hitters(
 ) -> DataFrame:
     """Exact top-``k`` most frequent values via sketch-then-verify.
 
-    Pass 1 runs a bounded-memory space-saving summary PER PARTITION
+    Pass 1 runs a bounded-memory Misra-Gries summary PER PARTITION
     (``capacity`` tracked items — no shuffle, no full vocabulary in
-    memory) and unions the tracked keys: by the space-saving guarantee
-    plus pigeonhole across partitions, any value with GLOBAL frequency
-    > N/capacity is in the union. Pass 2 exactly recounts only the
-    candidate set (broadcast semi-filter, one small shuffle) and takes
-    the top-k — so the result is exact whenever the true k-th count
-    exceeds N/capacity, which makes it oracle-verifiable while the
-    memory/shuffle profile stays sketch-shaped. Compare
+    memory) and unions the tracked keys. Misra-Gries keeps every value
+    whose partition-local frequency exceeds n_p/(capacity+1) (each
+    decrement round removes capacity+1 occurrences, so no value loses
+    more than n_p/(capacity+1)); by pigeonhole across partitions, any
+    value with GLOBAL frequency > N/capacity is in the union. Pass 2
+    exactly recounts only the candidate set (broadcast semi-filter, one
+    small shuffle) and takes the top-k — so the result is exact
+    whenever the true k-th count exceeds N/capacity, which makes it
+    oracle-verifiable while the memory/shuffle profile stays
+    sketch-shaped. Compare
     ``quality.top_tokens``: same answer, but its exchange carries the
     FULL vocabulary's partial counts; this one carries only
     ~partitions x capacity candidates.
     """
     values = df.select(F.col(value_col).alias("v"))
     candidates = values.mapInPandas(
-        _space_saving_partition(capacity, "v"),
+        _misra_gries_partition(capacity, "v"),
         "v " + df.schema[value_col].dataType.simpleString(),
     )
     # candidate union is ~partitions x capacity rows — broadcast it;

@@ -7850,7 +7850,7 @@ def ngram_diversity(spark, sf_dir):
 )
 def heavy_hitter_users(spark, sf_dir):
     """Top-20 most active users via sketch-then-verify: bounded-memory
-    per-partition space-saving candidates (mapInPandas, no shuffle),
+    per-partition Misra-Gries candidates (mapInPandas, no shuffle),
     then an EXACT recount of only the broadcast candidate union
     (operators/sketch.heavy_hitters). Exact — hence hash-verifiable —
     whenever the 20th count exceeds N/capacity (sf0.1: 85 vs 24.4);
